@@ -219,16 +219,29 @@ object StarSchemaBuilder {
         col("GDPGrowthRate"), col("InflationRate"))
   }
 
+  /** One econ row per year, from the newest landed object (object
+    * names carry the landing date, so within one landing dir they sort
+    * by it; ties inside one object break on the values). The fetch
+    * re-lands the whole indicator history each day, and joining every
+    * landed copy by year would multiply each fact row by the number of
+    * landings — the reference's J3 join does exactly that. */
+  def latestEconPerYear(econ: DataFrame): DataFrame = {
+    val w = Window.partitionBy(year(col("date"))).orderBy(col("filename").desc,
+      col("date").desc, col("GDPGrowthRate").desc, col("InflationRate").desc)
+    econ.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
+  }
+
   /** Full build: landing dir → star schema parquet (the reference's
     * `create_star_schema` task + COPY TO parquet, fetch_stocks.py:
-    * 130-266), as one job. Returns the four output DataFrames. */
+    * 130-266), as one job. Returns the four output DataFrames. The fact
+    * joins [[latestEconPerYear]], not every landed econ row. */
   def build(spark: SparkSession, landingDir: String, outDir: String): Map[String, DataFrame] = {
     val stocks = readLanding(spark, landingDir, "stocks", stocksSchema)
     val econ = readLanding(spark, landingDir, "world_bank", econSchema)
     val dimDate = buildDimDate(stocks, econ)
     val dimIndex = buildDimStockIndex(stocks)
     val dimCountry = buildDimCountry(spark)
-    val fact = buildFact(stocks, econ, dimIndex, dimCountry)
+    val fact = buildFact(stocks, latestEconPerYear(econ), dimIndex, dimCountry)
     val out = Map(
       "dim_date" -> dimDate, "dim_stock_index" -> dimIndex,
       "dim_country" -> dimCountry, "fact_table" -> fact)

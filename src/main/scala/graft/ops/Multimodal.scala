@@ -109,7 +109,13 @@ object Multimodal {
     * it). NonFatal, not just IOException: the JDK plugin readers throw
     * IllegalArgumentException / index errors on malformed headers that
     * pass the format sniff — one such row must not kill the
-    * partition. */
+    * partition.
+    *
+    * Header-truth caveat: formats whose header carries no checksum
+    * (BMP and its class) report whatever dimensions their header bytes
+    * spell, so garbage that happens to start with the format magic
+    * yields arbitrary width/height here, where a full pixel decode
+    * would have failed to the stub. No dimension bound is applied. */
   private def decodeImage(id: Long, bytes: Array[Byte]): Option[DecodedMeta] =
     try {
       val iis = new javax.imageio.stream.MemoryCacheImageInputStream(
@@ -221,7 +227,14 @@ object Multimodal {
     * as PNG — headless-safe, no display needed), digest-stub for
     * audio/video and corrupt payloads. Emits the target dimensions plus
     * a digest of the resized bytes; resized payloads stay in executor
-    * space (metadata-only schema downstream — the production shape). */
+    * space (metadata-only schema downstream — the production shape).
+    *
+    * resize() and decode() can disagree on the same payload: resize
+    * needs a full `ImageIO.read` pixel decode, while decode reads the
+    * header only. A row whose header is valid but whose pixel data is
+    * unreadable is reported as a real image by decode() and still gets
+    * the stub digest here, so consumers must not assume the two paths
+    * classify rows alike. */
   def resize(media: Dataset[MediaRow], width: Int, height: Int): DataFrame = {
     import media.sparkSession.implicits._
     media.mapPartitions { it =>

@@ -18,32 +18,36 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
   *  - `GET /indexes` — the sidebar's index list (`app.py:97-99`),
   *    JSON array of dim_stock_index rows.
   *  - `GET /bounds` — the date-range picker's min/max
-  *    (`app.py:101-103`), computed as an aggregate, not a scan.
+  *    (`app.py:101-103`).
   *  - `GET /series?index=C&start=D&end=D` — the chart's two series
-  *    (`app.py:118-127`) as JSON rows, filter-below-sort plan. Capped
-  *    at `maxSliceRows` (413 beyond): the dashboard slice is KB-sized
-  *    by intent, and a start/end spanning the whole fact must not
-  *    collect the fact into one response. `/chart` enforces the same
-  *    cap before rendering.
+  *    (`app.py:118-127`) as JSON rows. Capped at `maxSliceRows` (413
+  *    beyond): the dashboard slice is KB-sized by intent, and a
+  *    start/end spanning the whole fact must not become one response.
+  *    `/chart` enforces the same cap. A malformed date is 400.
   *  - `GET /chart?index=C&start=D&end=D` — the rendered dual-axis
   *    figure (`app.py:114-130`) as `image/svg+xml`; an empty slice
   *    returns the warning banner (`app.py:131`), still as SVG.
-  *  - `GET /latest?index=C&k=N` — latest-k table widget, planned as
-  *    TakeOrderedAndProject (never a full sort).
+  *  - `GET /latest?index=C&k=N` — latest-k table widget.
   *  - `POST /refresh` — snapshot-mode pointer poll
   *    ([[StarServe.refresh]]); the Streamlit analogue is a page rerun.
   *  - `GET /health` — liveness.
   *
-  * Serving-tier boundary: every response body is a KB-sized slice the
-  * reference also materializes per page view; the distributed plan
-  * work (filter pushdown, broadcast dim join, top-k) happened in
-  * [[StarServe]] before the collect. Requests run on a small thread
-  * pool; concurrent queries against a mid-refresh snapshot swap are
-  * exercised by the ServeHttpSpec race probe.
+  * Every data endpoint answers from [[StarServe]]'s driver-resident
+  * snapshot view: once the view is built, a request starts no Spark
+  * job, so it neither pays a stage's scheduling floor nor queues behind
+  * ingest stages for task slots. Bodies are byte-identical to the
+  * `toJSON` of the matching DataFrame accessor (ServeHttpSpec compares
+  * them). The row cap is a count on the view: a refused slice is never
+  * materialized. A request reads the view once, so a concurrent
+  * `/refresh` swap (exercised by the ServeHttpSpec race probe) serves
+  * it wholly from the old or wholly from the new snapshot. Requests
+  * run on a small thread pool; sockets run with TCP_NODELAY (see
+  * [[StarServeHttp.preferNoDelay]]).
   */
 class StarServeHttp(serve: StarServe, bindPort: Int = 0, threads: Int = 4,
     maxSliceRows: Int = 10000) {
 
+  StarServeHttp.preferNoDelay()
   private val server =
     HttpServer.create(new InetSocketAddress("127.0.0.1", bindPort), 0)
   // daemon threads: an embedder that returns from main() without
@@ -97,39 +101,12 @@ class StarServeHttp(serve: StarServe, bindPort: Int = 0, threads: Int = 4,
     }
   }
 
-  private def jsonArray(df: org.apache.spark.sql.DataFrame): String =
-    df.toJSON.collect().mkString("[", ",", "]")
-
-  /** [[jsonArray]] with the serving-tier size contract enforced: the
-    * dashboard slice is KB-sized BY INTENT, so a request whose
-    * predicate spans more than `maxSliceRows` rows (a hostile or
-    * fat-fingered start/end covering the whole fact) is refused with
-    * 413 instead of collecting the fact into one HTTP response. The
-    * probe is `limit(max+1)` — the scan stops at the cap, it never
-    * materializes the oversized slice. */
-  private def jsonArrayCapped(df: org.apache.spark.sql.DataFrame): String = {
-    // Int.MaxValue is the documented cap-off sentinel (chartSvg treats
-    // it that way) — without this branch, max+1 overflows to a
-    // NEGATIVE limit and every /series request 500s
-    if (maxSliceRows == Int.MaxValue)
-      return df.toJSON.collect().mkString("[", ",", "]")
-    val rows = df.limit(maxSliceRows + 1).toJSON.collect()
-    if (rows.length > maxSliceRows)
-      throw new TooLarge(
-        s"slice exceeds $maxSliceRows rows; narrow the date range")
-    rows.mkString("[", ",", "]")
-  }
-
   private def jsonErr(msg: String): String =
     s"""{"error":"${StarServeHttp.jsonEsc(msg)}"}"""
 
   /** Thrown by handlers for malformed CLIENT input → 400 (anything
     * else thrown by the serve path stays a 500). */
   private final class BadRequest(msg: String) extends RuntimeException(msg)
-
-  /** Thrown when a requested slice exceeds the serving-tier row cap →
-    * 413 Content Too Large (RFC 9110 §15.5.14). */
-  private final class TooLarge(msg: String) extends RuntimeException(msg)
 
   /** Wrap a handler with param validation + error mapping: a missing
     * required param is the client's fault (400), anything thrown by
@@ -167,10 +144,9 @@ class StarServeHttp(serve: StarServe, bindPort: Int = 0, threads: Int = 4,
           }
         }
       } catch {
-        case e: BadRequest =>
+        case e @ (_: BadRequest | _: StarServe.BadDate) =>
           respond(ex, 400, "application/json", jsonErr(e.getMessage))
-        case e: TooLarge =>
-          respond(ex, 413, "application/json", jsonErr(e.getMessage))
+        // 413 Content Too Large (RFC 9110 §15.5.14)
         case e: StarServe.SliceTooLarge =>
           respond(ex, 413, "application/json", jsonErr(e.getMessage))
         case e: Throwable =>
@@ -184,9 +160,7 @@ class StarServeHttp(serve: StarServe, bindPort: Int = 0, threads: Int = 4,
 
   handle("/health") { _ => (200, "application/json", """{"status":"ok"}""") }
 
-  handle("/indexes") { _ =>
-    (200, "application/json", jsonArray(serve.dimStockIndex))
-  }
+  handle("/indexes") { _ => (200, "application/json", serve.indexesJson) }
 
   handle("/bounds") { _ =>
     val (lo, hi) = serve.factDateBounds()
@@ -195,14 +169,10 @@ class StarServeHttp(serve: StarServe, bindPort: Int = 0, threads: Int = 4,
 
   handle("/series", required = Seq("index", "start", "end")) { p =>
     (200, "application/json",
-      jsonArrayCapped(serve.chartSeries(p("index"), p("start"), p("end"))))
+      serve.seriesJson(p("index"), p("start"), p("end"), maxSliceRows))
   }
 
   handle("/chart", required = Seq("index", "start", "end")) { p =>
-    // same slice cap as /series, enforced INSIDE chartSvg's single
-    // limit-bounded execution — a separate probe query would double
-    // the endpoint's plan work and race a concurrent snapshot refresh
-    // between check and render
     (200, "image/svg+xml",
       serve.chartSvg(p("index"), p("start"), p("end"), maxSliceRows))
   }
@@ -211,7 +181,7 @@ class StarServeHttp(serve: StarServe, bindPort: Int = 0, threads: Int = 4,
     val raw = p.getOrElse("k", "10")
     val k = raw.toIntOption.getOrElse(throw new BadRequest(s"k not an integer: $raw"))
     if (k <= 0 || k > 10000) throw new BadRequest(s"k out of range: $k")
-    (200, "application/json", jsonArray(serve.latest(p("index"), k)))
+    (200, "application/json", serve.latestJson(p("index"), k))
   }
 
   // POST-only: the snapshot swap mutates server state — a GET (link
@@ -257,6 +227,17 @@ object StarServeHttp {
   /** Bind + start in one call; port 0 picks an ephemeral port. */
   def serve(s: StarServe, port: Int = 0): StarServeHttp =
     new StarServeHttp(s, port).start()
+
+  /** Turn Nagle's algorithm off on serve sockets. The JDK server writes
+    * a response's headers and body as two TCP segments; with Nagle on,
+    * the body waits for the client's delayed ACK of the headers, about
+    * 40 ms per keep-alive request. The JDK reads the property once, when
+    * its server configuration class loads, so this must run before the
+    * first `HttpServer.create` in the JVM; a value the embedder has
+    * already set wins. */
+  private[serve] def preferNoDelay(): Unit =
+    if (System.getProperty("sun.net.httpserver.nodelay") == null)
+      System.setProperty("sun.net.httpserver.nodelay", "true")
 
   /** The "/" dashboard page: index selector + date range + inline-SVG
     * chart, driven entirely by the JSON/SVG endpoints. Kept

@@ -4,6 +4,9 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.etl.StarSchemaBuilder
 import graft.serve.{StarServe, StarServeHttp}
@@ -48,6 +51,37 @@ class ServeHttpSpec extends AnyFunSuite {
     try f(http, serve)
     finally { http.stop(0); serve.release() }
   }
+
+  /** Spark jobs started while `f` runs. Counted between two marker jobs
+    * on this thread: the listener bus delivers job starts in order, so
+    * once the closing marker is seen every earlier job start is too. */
+  private def jobsDuring(f: => Unit): Int = {
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    def marker(id: String): Unit = {
+      sc.setJobGroup(id, id)
+      try spark.range(1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!groups.contains(id) && System.nanoTime() < deadline) Thread.sleep(5)
+      assert(groups.contains(id), s"marker job $id never reached the listener")
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker("jobs-during-open")
+      f
+      marker("jobs-during-close")
+      val seen = groups.asScala.toVector
+      seen.indexOf("jobs-during-close") - seen.lastIndexOf("jobs-during-open") - 1
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def toJsonArray(df: org.apache.spark.sql.DataFrame): String =
+    df.toJSON.collect().mkString("[", ",", "]")
 
   test("endpoint contracts: health, indexes, bounds, latest") {
     withServer { (http, _) =>
@@ -99,6 +133,75 @@ class ServeHttpSpec extends AnyFunSuite {
       val empty = get(s"${http.url}/chart?index=%5EGSPC&start=2030-01-01&end=2030-01-02")
       assert(empty.statusCode() == 200 && empty.body().contains("<svg"))
     }
+  }
+
+  test("latest + indexes match the DataFrame accessors' toJSON byte-for-byte") {
+    withServer { (http, serve) =>
+      assert(get(s"${http.url}/indexes").body() == toJsonArray(serve.dimStockIndex))
+      // k below, at and beyond the ticker's 60 rows; the fixture's
+      // null DailyReturn/Volatility fields are omitted as toJSON omits them
+      for (k <- Seq(1, 5, 60, 10000)) {
+        val r = get(s"${http.url}/latest?index=%5EGSPC&k=$k")
+        assert(r.statusCode() == 200)
+        assert(r.body() == toJsonArray(serve.latest("^GSPC", k)), s"k=$k")
+      }
+      assert(get(s"${http.url}/latest?index=NOPE&k=5").body() ==
+        toJsonArray(serve.latest("NOPE", 5)))
+      // series edge ranges: whole fact, empty, reversed, unknown index,
+      // and a date form Spark's cast accepts beyond yyyy-MM-dd
+      for ((idx, start, end) <- Seq(("^DJI", "2023-01-01", "2025-01-01"),
+          ("^GSPC", "2030-01-01", "2030-02-01"), ("^GSPC", "2024-02-01", "2024-01-01"),
+          ("NOPE", "2024-01-01", "2024-02-01"), ("^GSPC", "2024-1-9", "2024-01-19 "))) {
+        val q = s"index=${java.net.URLEncoder.encode(idx, "UTF-8")}" +
+          s"&start=$start&end=${java.net.URLEncoder.encode(end, "UTF-8")}"
+        assert(get(s"${http.url}/series?$q").body() ==
+          toJsonArray(serve.chartSeries(idx, start, end)), q)
+      }
+    }
+  }
+
+  test("a malformed start/end is 400, not a server fault") {
+    withServer { (http, _) =>
+      for (path <- Seq("/series", "/chart"); q <- Seq(
+          "start=2024-13-45&end=2024-01-19", "start=2024-01-10&end=yesterday")) {
+        val r = get(s"${http.url}$path?index=%5EGSPC&$q")
+        assert(r.statusCode() == 400, s"$path?$q: ${r.statusCode()} ${r.body()}")
+        assert(r.body().contains("not a date"), r.body())
+      }
+    }
+  }
+
+  test("once the view is built no endpoint starts a Spark job, nor the first request after refresh()") {
+    import graft.streaming.StreamingPipeline
+    val snapDir = Files.createTempDirectory("graft_http_nojobs").toString
+    val static = new StarServe(spark, starDir)
+    val key = static.indexKeyFor("^GSPC").get
+    static.release()
+    def batch(close: Double, batchId: Long) = {
+      import spark.implicits._
+      StreamingPipeline.applyUpsertBatch(
+        Seq((key, java.sql.Date.valueOf("2024-03-01"), close, 2.5))
+          .toDF("IndexKey", "DateKey", "Close", "GDPGrowthRate"),
+        batchId, Seq("IndexKey", "DateKey"), snapDir, "nojobs")
+    }
+    batch(100.0, 0L)
+    val serve = StarServe.fromStreamingSnapshots(spark, starDir, snapDir)
+    val http = StarServeHttp.serve(serve)
+    try {
+      val paths = Seq("/indexes", "/bounds",
+        "/series?index=%5EGSPC&start=2024-03-01&end=2024-03-31",
+        "/chart?index=%5EGSPC&start=2024-03-01&end=2024-03-31",
+        "/latest?index=%5EGSPC&k=5")
+      def all() = paths.map(p => get(s"${http.url}$p"))
+      assert(all().forall(_.statusCode() == 200)) // builds the view
+      var rs = Seq.empty[HttpResponse[String]]
+      assert(jobsDuring { rs = all() } == 0)
+      assert(rs.forall(_.statusCode() == 200) && rs(2).body().contains("100.0"))
+      batch(101.5, 1L)
+      assert(serve.refresh())
+      assert(jobsDuring { rs = all() } == 0)
+      assert(rs.forall(_.statusCode() == 200) && rs(2).body().contains("101.5"))
+    } finally { http.stop(0); serve.release() }
   }
 
   test("error mapping: 400 on missing params, 404 on unknown path, 500 surfaced") {

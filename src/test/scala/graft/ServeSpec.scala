@@ -178,6 +178,12 @@ class ServeSpec extends AnyFunSuite {
     assert("<polyline".r.findAllIn(svg).length == 2)
     // deterministic: same slice, same bytes
     assert(svg == serve.chartSvg("^GSPC", "2024-01-10", "2024-01-19"))
+    // the view draws exactly the chartSeries frame's rows
+    val slice = serve.chartSeries("^GSPC", "2024-01-10", "2024-01-19").collect().toSeq
+      .map(r => (r.getDate(0).toLocalDate.toEpochDay,
+        Option(r.get(1)).map(_ => r.getDouble(1)), Option(r.get(2)).map(_ => r.getDouble(2))))
+    assert(svg == graft.serve.ChartRender.dualAxis(
+      "Close Price and GDP Growth - S&P 500", slice))
     // empty slice → the reference's warning banner
     assert(serve.chartSvg("^GSPC", "2031-01-01", "2031-01-02")
       .contains("No data found"))

@@ -83,4 +83,21 @@ class StarSchemaBuilderSpec extends AnyFunSuite {
     // country key constant
     assert(fact.select("CountryKey").distinct().head.getString(0) == "USA")
   }
+
+  test("re-landed world-bank history: one econ row per year, from the newest object") {
+    val dir = mkLanding()
+    // the daily fetch re-lands the whole indicator history; the newer
+    // object also revises 2024
+    Files.write(Paths.get(dir, "world_bank_2024-02-01.csv"),
+      "date,GDPGrowthRate,InflationRate\n2024-01-01,2.7,3.0\n2022-01-01,1.9,6.5".getBytes)
+    val out = Files.createTempDirectory("graft_star_reland").toString
+    StarSchemaBuilder.build(spark, dir, out)
+    val fact = spark.read.parquet(s"$out/fact_table.parquet").cache()
+    assert(fact.count() == 96) // 2 tickers × 48 days, no duplicates
+    assert(fact.select("IndexKey", "DateKey").distinct().count() == 96)
+    assert(fact.filter(year(col("DateKey")) === 2024)
+      .select("GDPGrowthRate", "InflationRate").distinct().collect()
+      .map(r => (r.getDouble(0), r.getDouble(1))).toSeq == Seq((2.7, 3.0)))
+    fact.unpersist()
+  }
 }
